@@ -5,24 +5,15 @@ import org.apache.spark.scheduler._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Static conf, default 100: the full registry generates far more
-      // distinct codegen classes than that, so the class cache thrashes —
-      // the r8 evidence run shows q49 Janino-recompiling 66 classes on
-      // EVERY run (~1-2 s of its fixed cost, and the component that
-      // amplifies under ambient CPU load, which is where the r7
-      // driver-vs-local 10.8 s/4.5 s divergence lives). One registry run
-      // compiles ~2k distinct classes; cache them all.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val summary = GraftSession.run(spark => bench(spark, sfDir, runs))
+    println(summary)
+    System.out.flush()
+  }
+
+  /** Time the registry on `spark`; returns the one-line JSON summary,
+    * which main prints after the session stops. */
+  private def bench(spark: SparkSession, sfDir: String, runs: Int): String = {
     // Per-run evidence sidecar (JSONL, one row per timed run): scheduler
     // counts (jobs/stages/tasks), GC-time and codegen-compile deltas, and
     // heap occupancy — the r7 verdict's q49/q37 driver-vs-local bench gap
@@ -266,6 +257,9 @@ object Bench {
     // budget; "shape_omitted" says how many didn't fit. The complete
     // per-run shape record stays in the evidence sidecar as before.
     val lineBudget = 1900
+    // load_max: the worst 1-min loadavg observed across all timed runs —
+    // the at-a-glance "was the machine busy" flag (full context per run
+    // in the evidence sidecar). ~16 chars, inside the tail-window budget.
     def line(shapesJson: String): String =
       f"""{"metric":"total","value":${r3(total)},"unit":"sec","qunit":"ms","method":"noop-median$runs-warm","nq":${results.size}$omittedJson,"load_max":$loadMax%.2f,"load_base":$loadBase%.2f,"queries":$qs$failedJson$shapesJson,"sf":"$sfDir"}"""
     val shapesJson = locally {
@@ -294,19 +288,14 @@ object Bench {
     // r3 charged cold file reads to arbitrary queries — none compare 1:1).
     // POSITION experiment for the driver's 12-rounds-dark `parsed` field
     // (r12 verdict item 3): the line itself parses (1.1 KB, verified),
-    // so what remains is position/prefix — print it AFTER spark.stop()
-    // as main's final statement so nothing of ours follows it on stdout,
-    // and rely on build.sbt routing forked run output straight through
-    // (run/outputStrategy := StdoutOutput — no "[info] " prefix) with
-    // sbt's trailing "[success] Total time" line suppressed
+    // so what remains is position/prefix — main prints it AFTER the
+    // session stops, as its final statement, so nothing of ours follows
+    // it on stdout, and relies on build.sbt routing forked run output
+    // straight through (run/outputStrategy := StdoutOutput — no "[info] "
+    // prefix) with sbt's trailing "[success] Total time" line suppressed
     // (Global/showSuccess := false). If BENCH_r13.json still carries
     // parsed: null after this, the consumer is parsing something other
     // than a stdout line and the gap is driver-side by elimination.
-    spark.stop()
-    // load_max: the worst 1-min loadavg observed across all timed runs —
-    // the at-a-glance "was the machine busy" flag (full context per run
-    // in the evidence sidecar). ~16 chars, inside the tail-window budget.
-    println(line(shapesJson))
-    System.out.flush()
+    line(shapesJson)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-job scheduler diagnostic for one registry query: run it once
   * and print one ORDERED line per Spark job — index, task count, and
@@ -12,9 +12,8 @@ import org.apache.spark.sql.SparkSession
   * 10× scaling-evidence corpus) an output diff names WHICH jobs
   * appeared and where in the sequence — evidence, not inference.
   *
-  * Usage: `runMain graft.JobProbe <sfDir> <queryName>`; config mirrors
-  * Bench exactly (same master/partitions/codegen cache), and Bench's
-  * table warm-up runs first so session-scoped one-offs (catalog
+  * Usage: `runMain graft.JobProbe <sfDir> <queryName>`; Bench's table
+  * warm-up runs first so session-scoped one-offs (catalog
   * listing, first codegen) don't appear as probe jobs. Absolute totals
   * can still sit one above the bench sidecar's (the probe counts job
   * STARTS for the whole action; the sidecar counts job ENDS inside the
@@ -25,19 +24,13 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: graft.JobProbe <sfDir> <queryName>")
     val Array(sfDir, qName) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries.getOrElse(qName,
       sys.error(s"unknown query: $qName"))
+    GraftSession.run(spark => probe(spark, sfDir, fn))
+  }
 
+  private def probe(spark: SparkSession, sfDir: String,
+                    fn: (SparkSession, String) => DataFrame): Unit = {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Int)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -68,6 +61,5 @@ object JobProbe {
       case (site, js) => println(s"site ${js.size}x  $site")
     }
     println(s"total jobs: ${jobs.size}")
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print a registry query's physical plan —
   * `explain("formatted")` by default, or any Spark explain mode given
   * as the third arg (`simple`, `extended`, `codegen`, `cost`,
@@ -12,8 +10,7 @@ import org.apache.spark.sql.SparkSession
   * many corpus-wide projections carry a tokenizer (`split(text`)
   * to verify a pipeline face's one-tokenization-pass claim.
   *
-  * Usage: `runMain graft.PlanDump <sfDir> <queryName> [mode]` —
-  * session config mirrors Bench.
+  * Usage: `runMain graft.PlanDump <sfDir> <queryName> [mode]`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,21 +18,11 @@ object PlanDump {
       "usage: graft.PlanDump <sfDir> <queryName> [mode]")
     val (sfDir, qName) = (args(0), args(1))
     val mode = if (args.length == 3) args(2) else "formatted"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries.getOrElse(qName, sys.error(s"unknown query: $qName"))
     // NOTE: queries whose builder runs eager stages (Pin.ser, stateful
     // ingests) execute those while BUILDING the frame; the printed plan
     // is the final consumer plan, with pinned relations appearing as
     // in-memory scans rather than their producing subplans.
-    fn(spark, sfDir).explain(mode)
-    spark.stop()
+    GraftSession.run(spark => fn(spark, sfDir).explain(mode))
   }
 }

@@ -34,7 +34,8 @@ import org.apache.spark.sql.functions._
   * geometric fold gate, `dirs` is the axis that shows the gate working:
   * it grows between folds (deferred O(store) rewrites) and collapses at
   * them, bounded by the byte-fraction/count triggers rather than by the
-  * cadence.
+  * cadence. The `embed` family's lines also carry the batch's
+  * `kept`/`dup_of_stored`/`dup_in_batch` status counts.
   *
   * Usage: `runMain graft.StoreAgingProbe <sfDir> <storeRoot> <nBatches>
   * <compactEvery> [families]` (families comma-separated, default all).
@@ -65,15 +66,11 @@ object StoreAgingProbe {
     val families = if (args.length == 5) args(4).split(",").map(_.trim).toSet
       else Set("dedup", "bm25", "ivf", "embed", "refresh", "refreshvec",
         "growvec")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    GraftSession.run(spark => age(spark, sfDir, storeRoot, n, compactEvery, families))
+  }
+
+  private def age(spark: SparkSession, sfDir: String, storeRoot: String,
+                  n: Int, compactEvery: Int, families: Set[String]): Unit = {
     import graft.sources.KeyedParquetStore
 
     def dataFiles(paths: Seq[String]): Long = paths.map { p =>
@@ -368,14 +365,26 @@ object StoreAgingProbe {
         extra = _ => f""","retrain_sec":$retrainSec%.2f""")
     }
     if (families("embed")) {
+      // Per-batch status counts: `dup_of_stored` and `dup_in_batch` both
+      // nonzero is the evidence that the vs-store AND in-batch faces fire
+      // (the hash split spreads each ScaleUp replica class across batches).
       val (sgP, vP) = (s"$storeRoot/embed/sigs", s"$storeRoot/embed/vecs")
+      var labeled: DataFrame = null
       run("embed", Seq(sgP, vP),
-        (b, i) => graft.pipeline.IncrementalEmbedDedup.ingestBatch(
-          spark, b, s"b$i", sgP, vP, threshold = 0.99),
+        (b, i) => {
+          labeled = graft.pipeline.IncrementalEmbedDedup.ingestBatch(
+            spark, b, s"b$i", sgP, vP, threshold = 0.99)
+          labeled
+        },
         i => Seq(sgP, vP).foreach(p => KeyedParquetStore.rollupBatchPartitions(
           spark, p, keepBatches = Set(s"b$i"))),
-        embBatch, vP)
+        embBatch, vP,
+        extra = _ => {
+          val counts = labeled.groupBy(col("status")).agg(count(lit(1)))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          Seq("kept", "dup_of_stored", "dup_in_batch")
+            .map(k => s""","$k":${counts.getOrElse(k, 0L)}""").mkString
+        })
     }
-    spark.stop()
   }
 }

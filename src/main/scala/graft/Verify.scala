@@ -1,30 +1,45 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [query ...]`. With two
+  * args it dumps the full registry — the correctness gate. With query
+  * names it dumps only those (isolating one misbehaving query at a big
+  * scale factor, where re-running the whole registry to reach it costs
+  * half an hour per attempt), and only into an absent or empty outDir:
+  * a partial dump next to stale parquet would let check.py verify the
+  * wrong binaries (bitten in r9 — a "targeted" re-verification of
+  * changed code actually compared the unchanged binaries' output). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Exactly two args, checked loudly: extra args used to die as an
-    // opaque MatchError BEFORE any dump, which left a previous run's
-    // parquet in outDir for check.py to silently re-verify as if fresh
-    // (bitten in r9 — a "targeted" re-verification of changed code
-    // actually compared the unchanged binaries' stale output). Query
-    // filtering belongs to check.py, which takes names as extra args.
-    require(args.length == 2,
-      s"usage: graft.Verify <sfDir> <outDir> (got ${args.length} args: " +
-        s"${args.mkString(" ")}) — to check a subset, pass query names " +
-        "to tools/check.py instead; Verify always dumps the full registry")
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2,
+      s"usage: graft.Verify <sfDir> <outDir> [query ...] (got ${args.length} args: " +
+        s"${args.mkString(" ")})")
+    val Array(sfDir, outDir) = args.take(2)
+    val subset = args.drop(2).toSeq
+    val registry = SparkEntry.queries
+    // Checked before any session starts, so a refused subset dump
+    // leaves outDir exactly as it found it.
+    if (subset.nonEmpty) {
+      val unknown = subset.filterNot(registry.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      val existing = Option(new java.io.File(outDir).list()).getOrElse(Array.empty[String])
+      require(existing.isEmpty,
+        s"a subset dump needs an absent or empty outDir, but $outDir holds " +
+          s"${existing.length} entries — stale parquet beside a partial dump " +
+          "would be re-verified as fresh; pick a throwaway dir")
+    }
+    val dumped =
+      if (subset.isEmpty) registry
+      else subset.distinct.map(n => n -> registry(n))
+    GraftSession.run(spark => dump(spark, sfDir, outDir, dumped))
+  }
+
+  private def dump(spark: SparkSession, sfDir: String, outDir: String,
+                   dumped: Iterable[(String, (SparkSession, String) => DataFrame)])
+      : Unit = {
     // One loud schema-drift message up front beats N analysis errors
     // scattered through the registry dump (r9: regenerated events.parquet
     // silently failed 7 queries one at a time). DIAGNOSE, don't abort:
@@ -44,24 +59,23 @@ object Verify {
     // 20+ minutes). repartition inserts an exchange after the result is
     // computed at full parallelism; only the KB-to-MB result rows cross
     // it to form the single output file check.py expects.
-    SparkEntry.queries.foreach { case (name, fn) =>
+    dumped.foreach { case (name, fn) =>
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    writeOracleSql(outDir, SparkEntry.oracleSql.keySet)
-    spark.stop()
+    writeOracleSql(outDir, dumped.map(_._1).toSet)
   }
 
   /** Dump `oracleSql` (restricted to `names`) as `outDir/oracle_sql.json`
-    * for tools/check.py. Shared with [[DumpSome]] so a diagnostic subset
-    * dump is also check.py-runnable. JSON string escape covers backslash,
-    * quote, and ALL control chars (<0x20) — a tab or CR in
-    * builder-authored SQL would otherwise make the driver's json.load
-    * fail and silently zero the round's correctness. */
-  private[graft] def writeOracleSql(outDir: String, names: Set[String]): Unit = {
+    * for tools/check.py, so a subset dump is check.py-runnable too. JSON
+    * string escape covers backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
+    * the driver's json.load fail and silently zero the round's
+    * correctness. */
+  private def writeOracleSql(outDir: String, names: Set[String]): Unit = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

@@ -267,6 +267,17 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
+  /** Banded LSH candidates over signatures `(doc_id, band, sig)`: every
+    * id pair sharing at least one (band, sig) bucket, once, as
+    * `(doc_a, doc_b)` with `doc_a < doc_b`. The self-join's exchange
+    * carries id-width rows keyed by (band, sig) — never shingles or text. */
+  def bandCandidates(sigs: DataFrame): DataFrame =
+    sigs.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
+      .join(sigs.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
+        Seq("band", "sig"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b").distinct()
+
   /** Exact Jaccard for given (doc_a, doc_b) pairs over the hashed shingle
     * relation `(doc_id, h)` — used to confirm LSH candidates.
     *
@@ -391,11 +402,7 @@ object Dedup {
       exactJaccard(chain, sh).filter(col("jaccard") >= threshold)
         .select(col("doc_a"), col("doc_b")))
     val comp = dedupClusters(spanning)
-    val cands = sigs.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
-      .join(sigs.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val cands = bandCandidates(sigs)
     // Survivors: endpoints unlabeled (in no confirmed-chain component)
     // or in DIFFERENT components — only these can still merge anything.
     val cross = cands
@@ -458,21 +465,16 @@ object Dedup {
     * driver bench recorded q37 at 15.7 s, dominated by exactly that).
     * See [[graft.Pin]] for why checkpoint-over-cache and serialized-
     * over-deserialized, and for the executor-loss trade-off. */
-  private[pipeline] def collapsedRepPairs(docs: DataFrame, numHashes: Int,
-                                          rowsPerBand: Int, shingleN: Int,
-                                          threshold: Double)
+  private[graft] def collapsedRepPairs(docs: DataFrame, numHashes: Int,
+                                       rowsPerBand: Int, shingleN: Int,
+                                       threshold: Double)
       : (DataFrame, DataFrame, DataFrame) = {
     val members = identicalClasses(docs)
     val repDocs = docs.join(
       members.filter(col("doc_id") === col("rep")).select(col("doc_id")),
       Seq("doc_id"), "left_semi")
     val sh = graft.Pin.ser(TextAnalysis.hashedShingles(repDocs, shingleN))
-    val sigs = bandSigs(sh, numHashes, rowsPerBand)
-    val cands = sigs.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
-      .join(sigs.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
-        Seq("band", "sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val cands = bandCandidates(bandSigs(sh, numHashes, rowsPerBand))
     (members, sh, exactJaccard(cands, sh).filter(col("jaccard") >= threshold))
   }
 

@@ -212,9 +212,8 @@ object IncrementalIvf {
         col("w")("cv").as("embedding"), col("w")("batch").as("batch")))
     // KB-sized; pinned so the centroid relation is not re-derived from
     // the store mid-replace
-    val index = Similarity.buildIvfIndex(corpus, numCells, trainIters)
-      .withColumn("iv", lit(v))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val index = graft.Pin.ser(Similarity.buildIvfIndex(corpus, numCells, trainIters)
+      .withColumn("iv", lit(v)))
     val keep = keepBatches.toSeq
     val reassigned = Similarity
       .assignIvfCells(corpus, index, passthrough = Seq("batch"))

@@ -358,8 +358,8 @@ object KeyedParquetStore {
         // NOT — without this a first-ever upsert into a store whose
         // parent directory doesn't exist yet fails create() on ENOENT
         // and surfaces as a bogus "concurrent upsert detected" (found
-        // by EmbedIngestProbe in r12: the O_EXCL switch in r11 silently
-        // regressed exactly this path).
+        // by aging the embed-dedup store in r12: the O_EXCL switch in
+        // r11 silently regressed exactly this path).
         Option(file.getParentFile).foreach(_.mkdirs())
         try file.createNewFile() && {
           // If the token write fails AFTER the O_EXCL create succeeded

@@ -3,21 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one local session per suite (lazy). */
+/** Shared test harness: one local session per suite (lazy), built by the
+  * same factory as every main, on four lanes whatever the machine. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // lets Tables.events read TIMESTAMP(NANOS)-encoded testdata (the
-    // r≤8 driver encoding) as nanos-longs; harmless for the micros
-    // encodings, which the reader adapts to by schema (r9 regression)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // keep saveAsTable's default warehouse out of the repo tree
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.build(cpus = 4)
 
   def d(s: String): java.sql.Date = java.sql.Date.valueOf(s)
 }

@@ -43,7 +43,7 @@ class SourcesSpec extends SparkSpec {
     // regression: the r11 O_EXCL lock switch dropped Hadoop create()'s
     // implicit parent-dir creation, so the first-ever upsert under a
     // not-yet-existing directory failed lock acquisition with a bogus
-    // "concurrent upsert detected" (found by EmbedIngestProbe)
+    // "concurrent upsert detected" (found by aging the embed-dedup store)
     val path = Files.createTempDirectory("store_parent").toString +
       "/nested/deeper/stocks"
     val v1 = Seq(("AAA", d("2024-01-01"), 10.0, 1))
